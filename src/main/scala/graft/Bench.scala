@@ -158,6 +158,12 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // a query that throws fails the bench: the session stops and the
+    // exception exits the JVM nonzero, with no JSON line
+    try run(spark, sfDir) finally spark.stop()
+  }
+
+  private def run(spark: SparkSession, sfDir: String): Unit = {
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup outside the timed region: run every headline
@@ -180,15 +186,13 @@ object Bench {
     // windows that inflate single runs up to 4×
     val results = headline.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        name -> (try math.min(time(fn(spark, sfDir).count()),
-                              time(fn(spark, sfDir).count()))
-                 catch { case _: Throwable => -1.0 })
+        name -> math.min(time(fn(spark, sfDir).count()),
+                         time(fn(spark, sfDir).count()))
       }
     } ++ headlineForced.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        name -> (try math.min(time(forceAll(fn(spark, sfDir))),
-                              time(forceAll(fn(spark, sfDir))))
-                 catch { case _: Throwable => -1.0 })
+        name -> math.min(time(forceAll(fn(spark, sfDir))),
+                         time(forceAll(fn(spark, sfDir))))
       }
     }
 
@@ -218,20 +222,19 @@ object Bench {
 
     // production shape: same pipeline over a conv-bucketed table scan
     // (zero data shuffle — the 100 TB layout; corpus written once,
-    // untimed). Guarded: a failure here (e.g. no /dev/shm) must not sink
-    // the whole bench artifact — the row reports -1 instead.
-    val (bktSec, bktIo) = try {
+    // untimed). A failure here (e.g. no /dev/shm) fails the bench.
+    val (bktSec, bktIo) = {
       val bktDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_BKT_DIR",
         "/dev/shm/graft-bench-bkt")
       if (!new java.io.File(s"$bktDir/_SUCCESS").exists())
         BucketedCorpus.write(TranscriptGen.turnsDs(spark, 145000L).toDF(),
           bktDir, "graft_bench_corpus", buckets = 32)
       def bkt = BucketedCorpus.open(spark, bktDir, "graft_bench_corpus", 32)
-      val bktSalt = Aggregate.saltFor(convClustered = true)
+      val bktSalt = Aggregate.saltFor(bucketed = true)
       pipelineRunFrom(spark, bkt, bktSalt) // warm
       val (s, _, b) = measured(pipelineRunFrom(spark, bkt, bktSalt))
       (s, b)
-    } catch { case _: Throwable => (-1.0, (0L, 0L, 0L)) }
+    }
 
     // corpus-curation end-to-end: dedup → clusters → decontamination →
     // quality → mixture → redaction → shard/split, one survivor filter
@@ -254,10 +257,8 @@ object Bench {
           .agg(bit_xor(col("h"))).head()
       }
     }
-    val curSec = try {
-      curationRun() // warm
-      math.min(curationRun(), curationRun())
-    } catch { case _: Throwable => -1.0 }
+    curationRun() // warm
+    val curSec = math.min(curationRun(), curationRun())
 
     val all = results :+ ("curation_e2e" -> curSec) :+
       ("pipeline_e2e" -> pipeSec) :+
@@ -268,6 +269,5 @@ object Bench {
     def ioJson(b: (Long, Long, Long)): String =
       s"""{"input_bytes":${b._1},"shuffle_write_bytes":${b._2},"shuffle_read_bytes":${b._3}}"""
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","pipeline_turns":$pipeTurns,"pipeline_turns_per_sec":$turnsPerSec%.0f,"io":{"pipeline_e2e":${ioJson(pipeIo)},"pipeline_bucketed":${ioJson(bktIo)}}}""")
-    spark.stop()
   }
 }

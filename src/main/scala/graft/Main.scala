@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** CLI entry: run the full batch pipeline on a synthetic corpus and print
   * what it did. Usage: runMain graft.Main [nConvs] [outDir] [configJsonPath]
   * With a config path, the topology (grok pattern, sinks, sampling) comes
-  * from JSON (PipelineConfig) instead of the coded defaults — the
+  * from JSON (PipelineConfig) instead of PipelineConfig.default — the
   * reference's YAML-driven service startup (SURVEY.md §3.1).
   */
 object Main {
@@ -40,13 +40,12 @@ object Main {
       spark.stop()
       return
     }
-    val cfg = cfgJson.map(PipelineConfig.fromJson)
+    val cfg = cfgJson.map(PipelineConfig.fromJson).getOrElse(PipelineConfig.default)
 
     val obs = new ObsMetrics(spark)
     val turns = TranscriptGen.turnsDs(spark, nConvs).toDF()
     val t0 = System.nanoTime()
-    val res = Pipeline.runBatch(spark, turns, outDir, obs = Some(obs),
-      config = cfg)
+    val res = Pipeline.runBatch(spark, turns, outDir, cfg, Some(obs))
     val secs = (System.nanoTime() - t0) / 1e9
 
     val total = res.routed.count()
@@ -58,7 +57,7 @@ object Main {
     println(s"== obsreport counters: ${obs.snapshot}")
     println("== routed physical plan:")
     Pipeline.transform(turns,
-      TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
+      TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF(), cfg)
       .explain("formatted")
     spark.stop()
   }

@@ -109,7 +109,7 @@ object ScalingBench {
         def turns =
           if (bucketed) BucketedCorpus.open(spark, corpusDir, "graft_corpus")
           else spark.read.parquet(corpusDir)
-        val salt = Aggregate.saltFor(convClustered = bucketed)
+        val salt = Aggregate.saltFor(bucketed)
         val job: () => (Double, Long) = stage match {
           case "sft"     => () => Bench.sftRunFrom(spark, turns)
           case "sftprep" => () => Bench.sftPrepRunFrom(spark, turns)

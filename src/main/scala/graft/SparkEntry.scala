@@ -134,7 +134,7 @@ object SparkEntry {
     val turns = TranscriptGen.turnsDs(spark, 500).toDF()
     val routed = Pipeline.transform(turns,
       TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
-    Aggregate.convRollup(routed)
+    Aggregate.convRollupFromPartials(Aggregate.partials(routed))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -7,21 +7,21 @@ import org.apache.spark.sql.functions._
   * explicit skew handling (SURVEY.md §2.7; north rule "salted repartitioning
   * to defuse hot-conversation skew").
   *
-  * Skew story: conversation sizes are Zipf — a handful of conv_ids own a
-  * large share of rows. Plain `groupBy(conv_id)` puts each hot key on ONE
-  * reduce task. For count/min/max/sum Spark's map-side partial aggregation
-  * already collapses most of that, but `collect_set`/`count_distinct` force
-  * full rows to the reducer. The salted two-phase plan bounds any single
-  * task's share of a hot key to 1/SALT:
+  * One shape for every run: [[partials]] makes a single salted shuffle
+  * keyed (conv_id, salt, sink); both final tables derive from that small
+  * frame ([[sinkCountsFromPartials]], [[convRollupFromPartials]]). Every
+  * partial is algebraic — count/sum/min/max and a one-hot `bit_or` tool
+  * mask — so map-side partial aggregation collapses each task's rows to
+  * its distinct keys before the shuffle, and the salt bounds any hot
+  * conversation's share of a reduce task to 1/SALT. The salt is
+  * DETERMINISTIC (xxhash64 of row keys, never rand()) so retries route
+  * rows identically (SURVEY.md §7.4).
   *
-  *   phase 1: groupBy(conv_id, salt = pmod(xxhash64(conv_id, turn_idx), SALT))
-  *            → partial count/min/max/sum + collect_set(tool)  (set ≤ 13)
-  *   phase 2: groupBy(conv_id) → merge partials; distinct tools =
-  *            size(array_distinct(flatten(collect_list(partial sets))))
-  *
-  * The salt is DETERMINISTIC (xxhash64 of row keys, never rand()) so retries
-  * and recomputations route rows identically (SURVEY.md §7.4). AQE skew
-  * handling stays on as the safety net.
+  * Rollup contract: `n_tools_distinct` counts the distinct tools of the
+  * tool dimension ([[TranscriptGen.toolNames]]) a conversation invoked.
+  * A `tool_invoked` outside the dimension sets no bit — that covers any
+  * unknown tool name and the `""` of a turn the grok pattern did not
+  * match — so such turns count in `n_turns` but not as a tool.
   */
 object Aggregate {
 
@@ -34,74 +34,34 @@ object Aggregate {
     * pressure, BASELINE.md round 2). Unclustered input shuffles → keep
     * the skew defense.
     */
-  def saltFor(convClustered: Boolean): Int =
-    if (convClustered) 1 else DefaultSalt
+  def saltFor(bucketed: Boolean): Int =
+    if (bucketed) 1 else DefaultSalt
 
-  /** Per-sink turn counts (batchprocessor-style counters, §2.5). */
+  /** Per-sink turn counts (batchprocessor-style counters, §2.5) straight
+    * from a routed frame — the per-micro-batch streaming counts.
+    */
   def sinkCounts(routed: DataFrame): DataFrame =
     routed.groupBy(col(Route.SinkCol)).agg(count(lit(1)).as("n_turns"))
 
-  /** Per-conversation rollup, salted two-phase. Output:
-    * (conv_id, n_turns, n_errors, n_tools_distinct, first_ts, last_ts,
-    *  sum_latency_ms)
+  /** One-hot bit of a tool in the tool dimension, 0 outside it. `bit_or`
+    * of these is a FIXED-WIDTH aggregate that stays in codegen'd
+    * HashAggregate; `collect_set` would force ObjectHashAggregate with
+    * per-group java sets, whose sort-based spill fallback collapses under
+    * memory pressure (measured: 210 s vs 14 s on the same 20M-turn corpus).
     */
-  def convRollup(parsed: DataFrame, salt: Int = DefaultSalt): DataFrame = {
-    val partial = parsed
-      .withColumn("_salt", pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(salt.toLong)))
-      .groupBy(col("conv_id"), col("_salt"))
-      .agg(
-        count(lit(1)).as("p_turns"),
-        sum(when(col("err_code").isNotNull, 1L).otherwise(0L)).as("p_errors"),
-        min(col("ts")).as("p_first"),
-        max(col("ts")).as("p_last"),
-        sum(col("latency_ms")).as("p_lat"),
-        collect_set(when(col("tool_invoked") =!= "none", col("tool_invoked"))).as("p_tools"))
-    partial
-      .groupBy(col("conv_id"))
-      .agg(
-        sum(col("p_turns")).as("n_turns"),
-        sum(col("p_errors")).as("n_errors"),
-        size(array_distinct(flatten(collect_list(col("p_tools"))))).as("n_tools_distinct"),
-        min(col("p_first")).as("first_ts"),
-        max(col("p_last")).as("last_ts"),
-        sum(col("p_lat")).as("sum_latency_ms"))
-  }
-
-  /** ONE-PASS partials for the whole aggregate stage: a single salted
-    * shuffle over the full data keyed by (conv_id, salt, sink); both
-    * per-sink counts and per-conversation rollups derive from this small
-    * frame with near-free final aggregations.
-    *
-    * This is the 100 TB shape: the alternative (separate
-    * `sinkCounts(routed)` + `convRollup(routed)`) either shuffles the full
-    * data twice or persists the full routed frame — both non-scaling. Here
-    * map-side partial aggregation collapses each task's rows to its
-    * distinct (conv, salt, sink) keys before the only full-data shuffle,
-    * and the salt bounds any hot conversation's share of a reduce task.
-    */
-  /** Distinct-tool bitmask: the tool vocabulary is small and known (the
-    * broadcast tool_dim), so per-group distinct tools is `bit_or` of a
-    * one-hot long — a FIXED-WIDTH aggregate that stays in codegen'd
-    * HashAggregate. `collect_set` at this cardinality forces
-    * ObjectHashAggregate with per-group java sets, whose sort-based
-    * spill fallback collapses under memory pressure (measured: 210 s vs
-    * 14 s on the same 20M-turn corpus). Bitmask = the 100 TB shape for
-    * small-vocabulary distinct counting; [[convRollup]] keeps the
-    * set-based variant for unbounded vocabularies.
-    */
-  def toolMask(toolInvoked: Column,
-               vocab: Seq[String] = TranscriptGen.toolNames): Column = {
-    // shiftleft wraps mod 64 — a larger vocab would silently alias bits;
-    // callers with unbounded vocabularies must use the set-based rollup.
+  def toolMask(toolInvoked: Column): Column = {
+    val vocab = TranscriptGen.toolNames
+    // shiftleft wraps mod 64 — a larger vocab would silently alias bits
     require(vocab.size <= 64, s"toolMask vocab too large (${vocab.size} > 64)")
     val pos = array_position(typedLit(vocab), toolInvoked)
-    when(toolInvoked =!= "none" && pos > 0,
-      call_function("shiftleft", lit(1L), (pos - 1).cast("int")))
+    when(pos > 0, call_function("shiftleft", lit(1L), (pos - 1).cast("int")))
       .otherwise(lit(0L))
   }
 
-  def partials(routed: DataFrame, salt: Int = DefaultSalt,
-               vocab: Seq[String] = TranscriptGen.toolNames): DataFrame =
+  /** The one aggregate shuffle: per (conv_id, salt, sink) turn and error
+    * counts, first/last ts, latency sum and tool mask.
+    */
+  def partials(routed: DataFrame, salt: Int = DefaultSalt): DataFrame =
     routed
       .withColumn("_salt",
         pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(salt.toLong)))
@@ -112,13 +72,16 @@ object Aggregate {
         min(col("ts")).as("p_first"),
         max(col("ts")).as("p_last"),
         sum(col("latency_ms")).as("p_lat"),
-        bit_or(toolMask(col("tool_invoked"), vocab)).as("p_toolmask"))
+        bit_or(toolMask(col("tool_invoked"))).as("p_toolmask"))
 
   /** Per-sink counts from [[partials]] — tiny final aggregation. */
   def sinkCountsFromPartials(partials: DataFrame): DataFrame =
     partials.groupBy(col(Route.SinkCol)).agg(sum(col("p_turns")).as("n_turns"))
 
-  /** Per-conversation rollup from [[partials]] — tiny final aggregation. */
+  /** Per-conversation rollup from [[partials]] — tiny final aggregation.
+    * Output: (conv_id, n_turns, n_errors, n_tools_distinct, first_ts,
+    * last_ts, sum_latency_ms).
+    */
   def convRollupFromPartials(partials: DataFrame): DataFrame =
     partials
       .groupBy(col("conv_id"))
@@ -131,7 +94,8 @@ object Aggregate {
         sum(col("p_lat")).as("sum_latency_ms"))
 
   /** Unsalted single-phase rollup — correctness oracle for the salted plan
-    * (results must be identical; asserted in AggregateSpec).
+    * (results must be identical on in-dimension tools; asserted in
+    * AggregateSpec).
     */
   def convRollupUnsalted(parsed: DataFrame): DataFrame =
     parsed.groupBy(col("conv_id")).agg(

@@ -6,16 +6,17 @@ import org.apache.spark.sql.functions._
 /** Config-driven pipeline topology — the Spark analog of the reference's
   * YAML service config (SURVEY.md §3.1, ref `config/config.go: Load` with
   * its validation pass; `service/builder`): the parse pattern, sampling,
-  * and per-sink routing predicates are DATA, not code. Predicates are Spark
-  * SQL boolean expressions compiled with `expr(...)` — they stay visible to
-  * Catalyst, so pushdown/pruning still apply (the optimization the
-  * reference's hand-ordered YAML never gets).
+  * and per-sink routing predicates are DATA, not code. Every run builds
+  * its pipeline from a config; the coded defaults are [[PipelineConfig.default]].
+  * Predicates are Spark SQL boolean expressions compiled with `expr(...)` —
+  * they stay visible to Catalyst, so pushdown/pruning still apply (the
+  * optimization the reference's hand-ordered YAML never gets).
   *
-  * JSON instead of YAML (jackson ships with Spark; no new dependency):
+  * JSON instead of YAML (jackson ships with Spark; no new dependency);
+  * an unknown key is an error, never silently ignored:
   * {
-  *   "grok_pattern": "tool=(?<tool_invoked>...)...",
+  *   "grok_pattern": "<regex naming tool_invoked, status, latency_ms>",
   *   "sample_pct": 100.0,
-  *   "salt": 16,
   *   "sinks": [ {"name": "errors", "predicate": "err_code RLIKE '^E5'"} ]
   * }
   */
@@ -24,8 +25,7 @@ final case class SinkConfig(name: String, predicate: String)
 final case class PipelineConfig(
     grokPattern: String,
     sinks: Seq[SinkConfig],
-    samplePct: Double = 100.0,
-    salt: Int = Aggregate.DefaultSalt) {
+    samplePct: Double = 100.0) {
 
   /** Mirrors the reference's config validation (every pipeline ≥1
     * receiver & ≥1 exporter; unique component ids).
@@ -38,7 +38,6 @@ final case class PipelineConfig(
       s"config: '${Route.RestSink}' is the reserved catch-all sink name")
     require(samplePct >= 0 && samplePct <= 100,
       s"config: sample_pct out of range: $samplePct")
-    require(salt >= 1, s"config: salt must be >= 1: $salt")
     val (_, names, _) = graft.expr.GrokExtract.compilePattern(grokPattern)
     require(names.nonEmpty, s"config: grok_pattern has no named groups")
     this
@@ -49,17 +48,16 @@ final case class PipelineConfig(
 
 object PipelineConfig {
 
-  /** The coded defaults, as config (also serves as the reference example). */
-  val defaultJson: String =
-    """{
-      |  "grok_pattern": "tool=(?<tool_invoked>[A-Za-z0-9_]+) status=(?<status>[A-Za-z0-9]+) latency=(?<latency_ms>[0-9]+)ms",
-      |  "sample_pct": 100.0,
-      |  "salt": 16,
-      |  "sinks": [
-      |    {"name": "tool_search", "predicate": "tool_invoked IN ('search','browse','fetch')"},
-      |    {"name": "errors", "predicate": "err_code RLIKE '^E5'"}
-      |  ]
-      |}""".stripMargin
+  /** The transcript pipeline's defaults (FIXTURES.md §1, §3): the
+    * TranscriptGen text layout, no sampling, retrieval-tool and
+    * server-error sinks. `configs/pipeline.json` spells out the same value.
+    */
+  val default: PipelineConfig = PipelineConfig(
+    grokPattern = "tool=(?<tool_invoked>[A-Za-z0-9_]+) status=(?<status>[A-Za-z0-9]+) latency=(?<latency_ms>[0-9]+)ms",
+    sinks = Seq(
+      SinkConfig("tool_search", "tool_invoked IN ('search','browse','fetch')"),
+      SinkConfig("errors", "err_code RLIKE '^E5'"))
+  ).validated
 
   /** Strict mapper: duplicate JSON keys are a config error, not
     * last-wins — Jackson's default silently keeps the last value, which
@@ -73,9 +71,22 @@ object PipelineConfig {
 
   def fromJson(json: String): PipelineConfig = fromNode(mapper.readTree(json))
 
+  /** Reject keys outside `known`: a typo such as `sample_pc` must not run
+    * silently with the default.
+    */
+  private def onlyKeys(node: com.fasterxml.jackson.databind.JsonNode,
+                       where: String, known: Set[String]): Unit = {
+    require(node.isObject, s"config: $where must be an object")
+    node.fieldNames().forEachRemaining { k =>
+      require(known(k), s"config: unknown key '$k' in $where " +
+        s"(known: ${known.toSeq.sorted.mkString(", ")})")
+    }
+  }
+
   private[graft] def fromNode(
       root: com.fasterxml.jackson.databind.JsonNode): PipelineConfig = {
     import com.fasterxml.jackson.databind.JsonNode
+    onlyKeys(root, "pipeline config", Set("grok_pattern", "sample_pct", "sinks"))
     def req(field: String): JsonNode = {
       val n = root.get(field)
       require(n != null, s"config: missing field '$field'")
@@ -86,6 +97,7 @@ object PipelineConfig {
       require(arr.isArray, "config: 'sinks' must be an array")
       (0 until arr.size()).map { i =>
         val s = arr.get(i)
+        onlyKeys(s, s"sink $i", Set("name", "predicate"))
         require(s.hasNonNull("name") && s.hasNonNull("predicate"),
           s"config: sink $i needs 'name' and 'predicate'")
         SinkConfig(s.get("name").asText(), s.get("predicate").asText())
@@ -94,33 +106,8 @@ object PipelineConfig {
     PipelineConfig(
       grokPattern = req("grok_pattern").asText(),
       sinks = sinks,
-      samplePct = Option(root.get("sample_pct")).map(_.asDouble()).getOrElse(100.0),
-      salt = Option(root.get("salt")).map(_.asInt()).getOrElse(Aggregate.DefaultSalt)
+      samplePct = Option(root.get("sample_pct")).map(_.asDouble()).getOrElse(100.0)
     ).validated
-  }
-
-  /** Build the routed frame from config: (sample) → parse → enrich → route.
-    * The grok pattern must produce `tool_invoked`, `status`, `latency_ms`
-    * groups (the ParsedTurn contract).
-    */
-  def transform(spark: SparkSession, turns: DataFrame,
-                cfg: PipelineConfig): DataFrame = {
-    val sampled =
-      if (cfg.samplePct >= 100.0) turns
-      else Sampler.sampleConversations(turns, cfg.samplePct)
-    val g = graft.expr.GrokExtract.grok_extract(col("text"), cfg.grokPattern)
-    val parsed = sampled
-      .withColumn("_g", g)
-      .withColumn("tool_invoked", coalesce(col("_g.tool_invoked"), lit("")))
-      .withColumn("status", coalesce(col("_g.status"), lit("")))
-      .withColumn("err_code",
-        when(col("_g.status").rlike("^E[0-9]{3}$"), col("_g.status")))
-      .withColumn("latency_ms",
-        coalesce(col("_g.latency_ms").cast("long"), lit(-1L)))
-      .drop("_g")
-    val enriched = Enrich.enrich(parsed,
-      TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
-    Route.assign(enriched, cfg.sinkSpecs)
   }
 }
 
@@ -173,8 +160,7 @@ object ServiceConfig {
                obs: Option[ObsMetrics] = None): Map[String, PipelineResult] = {
     val shared = turns.persist()
     try svc.pipelines.map { case (name, cfg) =>
-      name -> Pipeline.runBatch(spark, shared, s"$outDir/$name",
-        obs = obs, config = Some(cfg))
+      name -> Pipeline.runBatch(spark, shared, s"$outDir/$name", cfg, obs)
     }.toMap
     finally shared.unpersist()
   }
@@ -189,7 +175,7 @@ object ServiceConfig {
                    checkpointRoot: String, svc: ServiceConfig)
       : Map[String, org.apache.spark.sql.streaming.StreamingQuery] =
     svc.pipelines.map { case (name, cfg) =>
-      name -> StreamingPipeline.startWithConfig(spark, inputDir,
+      name -> StreamingPipeline.start(spark, inputDir,
         s"$outDir/$name", s"$checkpointRoot/$name", cfg)
     }.toMap
 
@@ -205,9 +191,11 @@ object ServiceConfig {
     * The trade vs [[startStreams]]: one offset log — pipelines advance and
     * recover TOGETHER (the reference's shared-receiver topology), while
     * startStreams gives each pipeline an independent failure domain.
-    * Output layout matches startStreams ($outDir/<name>/routed/batch_id=*),
-    * and writes stay idempotent per (pipeline, batchId) so checkpoint
-    * replay after a crash overwrites instead of duplicating.
+    * Each pipeline's batch is committed by [[StreamingPipeline.commitBatch]],
+    * so the output layout matches startStreams ($outDir/<name>/routed,
+    * sink_counts and _lineage, per batch_id), and writes stay idempotent
+    * per (pipeline, batchId) so checkpoint replay after a crash overwrites
+    * instead of duplicating.
     */
   def startStreamsShared(spark: SparkSession, inputDir: String,
                          outDir: String, checkpointDir: String,
@@ -215,22 +203,17 @@ object ServiceConfig {
                          maxFilesPerTrigger: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.streaming.Trigger
-    val stream = spark.readStream
-      .schema(Schemas.turn)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-      .withWatermark("ts", "10 minutes")
-    stream.writeStream
+    val roleDim = TranscriptGen.roleDim(spark).toDF()
+    val toolDim = TranscriptGen.toolDim(spark).toDF()
+    StreamingPipeline.source(spark, inputDir, maxFilesPerTrigger).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.persist()
         try svc.pipelines.foreach { case (name, cfg) =>
-          PipelineConfig.transform(spark, cached, cfg)
-            .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-            .write.mode("overwrite")
-            .partitionBy(Route.SinkCol, "tool_invoked", "role")
-            .parquet(s"$outDir/$name/routed/batch_id=$batchId")
+          StreamingPipeline.commitBatch(
+            Pipeline.transform(cached, roleDim, toolDim, cfg),
+            s"$outDir/$name", batchId, obs = None)
         } finally { cached.unpersist(); () }
       }
       .start()

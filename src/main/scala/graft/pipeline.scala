@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
 /** End-to-end batch pipeline: parse → enrich → route → aggregate
   * (SURVEY.md §3.2 Spark analog). parse/enrich/route are narrow
   * transformations fused by whole-stage codegen (broadcast joins are
-  * narrow); the only shuffles are the two aggregates.
+  * narrow); the only shuffle is the salted aggregate partials.
+  *
+  * Every run is config-driven, like the reference's `service/builder`:
+  * the coded defaults are just [[PipelineConfig.default]].
   */
 final case class PipelineResult(
     routed: DataFrame,
@@ -28,55 +31,40 @@ object Pipeline {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 
-  /** Pure transform portion (no writes) — shared by batch and streaming. */
+  /** Pure transform (no writes) — shared by batch, streaming and service
+    * runs: (sample) → parse → enrich → route.
+    */
   def transform(turns: DataFrame, roleDim: DataFrame, toolDim: DataFrame,
-                sinks: Seq[SinkSpec] = Route.defaultSinks,
-                useGrok: Boolean = true): DataFrame = {
-    val parsed = if (useGrok) Parse.parseGrok(turns) else Parse.parse(turns)
-    val enriched = Enrich.enrich(parsed, roleDim, toolDim)
-    Route.assign(enriched, sinks)
+                cfg: PipelineConfig = PipelineConfig.default): DataFrame = {
+    val sampled =
+      if (cfg.samplePct < 100.0) Sampler.sampleConversations(turns, cfg.samplePct)
+      else turns
+    val enriched = Enrich.enrich(Parse.parseGrok(sampled, cfg.grokPattern),
+      roleDim, toolDim)
+    Route.assign(enriched, cfg.sinkSpecs)
   }
 
-  /** Full batch run with fanout write + aggregates + lineage.
-    * The routed frame is persisted once (cloningfanout analog) because three
-    * consumers read it: the partitioned write and both aggregates.
-    * `convClustered`: pass true when `turns` comes from a conv-bucketed
-    * scan ([[BucketedCorpus.open]]) — selects [[Aggregate.saltFor]]'s
-    * shuffle-free salt.
+  /** Full batch run with routed write + aggregates + lineage.
+    * The routed frame is persisted once (cloningfanout analog) because
+    * the partitioned write, the aggregate partials and the lineage all
+    * read it.
     */
   def runBatch(spark: SparkSession, turns: DataFrame, outDir: String,
-               sinks: Seq[SinkSpec] = Route.defaultSinks,
+               cfg: PipelineConfig = PipelineConfig.default,
                obs: Option[ObsMetrics] = None,
-               batchId: Long = 0L,
-               config: Option[PipelineConfig] = None,
-               convClustered: Boolean = false): PipelineResult = {
-    val roleDim = TranscriptGen.roleDim(spark).toDF()
-    val toolDim = TranscriptGen.toolDim(spark).toDF()
-    val routed = config
-      .map(c => PipelineConfig.transform(spark, turns, c))
-      .getOrElse(transform(turns, roleDim, toolDim, sinks))
-      .persist()
-    // The bitmask rollup is bound to the default tool vocabulary; a
-    // config-driven topology can extract tool names outside it (mask 0 →
-    // silent undercount), so config runs take the set-based rollup instead.
-    val maskSafe = config.isEmpty
+               batchId: Long = 0L): PipelineResult = {
+    val routed = transform(turns, TranscriptGen.roleDim(spark).toDF(),
+      TranscriptGen.toolDim(spark).toDF(), cfg).persist()
     // partials is tiny (one row per (conv_id, salt, sink)) but feeds BOTH
     // final aggregates — persist it or the full-data salted shuffle over
     // routed runs twice (Spark does not reuse exchanges across queries).
-    val partials =
-      if (maskSafe)
-        Some(Aggregate.partials(routed,
-          salt = Aggregate.saltFor(convClustered)).persist())
-      else None
+    val partials = Aggregate.partials(routed).persist()
     try {
       Route.writePartitioned(routed, s"$outDir/routed")
-      val counts = partials.map(Aggregate.sinkCountsFromPartials)
-        .getOrElse(Aggregate.sinkCounts(routed))
-      val rollup = partials.map(Aggregate.convRollupFromPartials)
-        .getOrElse(Aggregate.convRollup(routed, salt = config.map(_.salt)
-          .getOrElse(Aggregate.DefaultSalt)))
-      counts.write.mode("overwrite").parquet(s"$outDir/sink_counts")
-      rollup.write.mode("overwrite").parquet(s"$outDir/conv_rollup")
+      Aggregate.sinkCountsFromPartials(partials)
+        .write.mode("overwrite").parquet(s"$outDir/sink_counts")
+      Aggregate.convRollupFromPartials(partials)
+        .write.mode("overwrite").parquet(s"$outDir/conv_rollup")
       Obs.writeLineage(routed, batchId, "route", outDir)
       obs.foreach { m =>
         // total routed rows from the (tiny) just-written counts table —
@@ -92,7 +80,7 @@ object Pipeline {
         spark.read.parquet(s"$outDir/sink_counts"),
         spark.read.parquet(s"$outDir/conv_rollup"))
     } finally {
-      partials.foreach(_.unpersist())
+      partials.unpersist()
       routed.unpersist()
     }
   }

@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
   * invariant "routed union == input" holds by construction.
   *
   * Scale: `assign` is a single narrow `CASE WHEN` projection (whole-stage
-  * codegen). Writing is ONE pass with `partitionBy("sink", ...)` — at 10^12
-  * rows, N filtered re-scans (the collector's literal fanout) would read the
-  * batch N times; a partitioned single write reads it once. The
-  * collector-literal strategy is kept as [[writeFanout]] for small N sinks
-  * where per-sink write options differ.
+  * codegen). [[writePartitioned]] is the one routed writer — batch runs,
+  * every streaming micro-batch and the shared-scan service all write
+  * through it — in ONE pass with `partitionBy("sink", ...)`: at 10^12 rows,
+  * N filtered re-scans (the collector's literal fanout) would read the
+  * batch N times; a partitioned single write reads it once.
   */
 final case class SinkSpec(name: String, pred: Column)
 
@@ -38,37 +38,17 @@ object Route {
   /** Default sink topology for the transcript pipeline (FIXTURES.md §3):
     * retrieval-tool turns, server-error turns, everything else.
     */
-  def defaultSinks: Seq[SinkSpec] = Seq(
-    SinkSpec("tool_search", col("tool_invoked").isin("search", "browse", "fetch")),
-    SinkSpec("errors", col("err_code").rlike("^E5"))
-  )
+  def defaultSinks: Seq[SinkSpec] = PipelineConfig.default.sinkSpecs
 
-  /** Single-pass partitioned fanout write — the scale path. Keyed by
-    * sink/tool/role per the north rule ("per-sink tables keyed by tool and
-    * role"). `sortWithinPartitions` gives reproducible file contents without
-    * a global sort (SURVEY.md §7.4).
+  /** Single-pass partitioned write, keyed by sink/tool/role per the north
+    * rule ("per-sink tables keyed by tool and role"). `sortWithinPartitions`
+    * gives reproducible file contents without a global sort (SURVEY.md
+    * §7.4); mode overwrite makes a replayed streaming batch idempotent.
     */
-  def writePartitioned(routed: DataFrame, outDir: String,
-                       format: String = "parquet"): Unit =
+  def writePartitioned(routed: DataFrame, outDir: String): Unit =
     routed
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      .write.format(format).mode("overwrite")
+      .write.mode("overwrite")
       .partitionBy(SinkCol, "tool_invoked", "role")
-      .save(outDir)
-
-  /** Collector-literal fanout: persist once (≈ cloningfanoutconnector's
-    * clone-once), then one filtered write per sink. Use when sinks need
-    * different formats/options; O(N) scans of the cached batch otherwise.
-    */
-  def writeFanout(routed: DataFrame, outDir: String, sinkNames: Seq[String],
-                  format: String = "parquet"): Unit = {
-    val cached = routed.persist()
-    try {
-      (sinkNames :+ RestSink).distinct.foreach { s =>
-        cached.filter(col(SinkCol) === s).drop(SinkCol)
-          .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-          .write.format(format).mode("overwrite").save(s"$outDir/sink=$s")
-      }
-    } finally { cached.unpersist() }
-  }
+      .parquet(outDir)
 }

@@ -8,6 +8,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * with idempotent per-batch sink commits (SURVEY.md §2.2 exporterhelper
   * mapping; north rule "resumable from checkpoint").
   *
+  * One path for every stream: the transform is [[Pipeline.transform]]
+  * under a [[PipelineConfig]] (the coded defaults are
+  * [[PipelineConfig.default]]), and each micro-batch is committed by
+  * [[commitBatch]] — the routed rows through the one routed writer
+  * [[Route.writePartitioned]], plus per-batch sink counts and lineage.
+  *
   * Idempotence: each micro-batch writes to a deterministic
   * `batch_id=<id>` directory with mode("overwrite"). If the query dies
   * after writing but before the checkpoint commit, the replayed batch
@@ -20,87 +26,63 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingPipeline {
 
-  def start(spark: SparkSession, inputDir: String, outDir: String,
-            checkpointDir: String,
-            sinks: Seq[SinkSpec] = Route.defaultSinks,
-            triggerMs: Long = 200L,
-            maxFilesPerTrigger: Int = 8,
-            maxBytesPerTrigger: Option[Long] = None,
-            obs: Option[ObsMetrics] = None): StreamingQuery = {
-    val roleDim = TranscriptGen.roleDim(spark).toDF()
-    val toolDim = TranscriptGen.toolDim(spark).toDF()
-
-    // batchprocessor flush triad (§2.5): ProcessingTime = timeout flush,
-    // maxFilesPerTrigger = count flush, maxBytesPerTrigger = size flush.
-    // Spark rejects count+size set together (FileStreamOptions), exactly
-    // like the reference's send_batch_size vs send_batch_max_size split —
-    // a size flush replaces the count flush.
+  /** The transcript file source. batchprocessor flush triad (§2.5):
+    * ProcessingTime = timeout flush, maxFilesPerTrigger = count flush,
+    * maxBytesPerTrigger = size flush. Spark rejects count+size set
+    * together (FileStreamOptions), exactly like the reference's
+    * send_batch_size vs send_batch_max_size split — a size flush replaces
+    * the count flush.
+    */
+  private[graft] def source(spark: SparkSession, inputDir: String,
+                            maxFilesPerTrigger: Int,
+                            maxBytesPerTrigger: Option[Long] = None): DataFrame = {
     val reader = spark.readStream.schema(Schemas.turn)
     maxBytesPerTrigger match {
       case Some(b) => reader.option("maxBytesPerTrigger", b)
       case None    => reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     }
-    val stream = reader
-      .parquet(inputDir)
-      .withWatermark("ts", "10 minutes")
+    reader.parquet(inputDir).withWatermark("ts", "10 minutes")
+  }
 
+  /** Commit one routed micro-batch under `outDir`: routed rows, sink
+    * counts and lineage, each in its own `batch_id=<id>` directory.
+    * The batch is persisted once because all three read it.
+    */
+  private[graft] def commitBatch(routed: DataFrame, outDir: String,
+                                 batchId: Long, obs: Option[ObsMetrics]): Unit = {
+    val cached = routed.persist()
+    try {
+      Route.writePartitioned(cached, s"$outDir/routed/batch_id=$batchId")
+      Aggregate.sinkCounts(cached)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(s"$outDir/sink_counts/batch_id=$batchId")
+      val sentRows = Obs.writeLineage(cached, batchId, "route", outDir)
+      obs.foreach(_.sent("route").add(sentRows))
+    } finally { cached.unpersist() }
+  }
+
+  def start(spark: SparkSession, inputDir: String, outDir: String,
+            checkpointDir: String,
+            cfg: PipelineConfig = PipelineConfig.default,
+            triggerMs: Long = 200L,
+            maxFilesPerTrigger: Int = 8,
+            maxBytesPerTrigger: Option[Long] = None,
+            obs: Option[ObsMetrics] = None): StreamingQuery = {
+    val stream = source(spark, inputDir, maxFilesPerTrigger, maxBytesPerTrigger)
     // observe tag → per-micro-batch rows/null-keys on every
     // StreamingQueryProgress (harvested by ObsStreamingListener)
     val routed = Obs.observed(
-      Pipeline.transform(stream, roleDim, toolDim, sinks), "stream_route")
+      Pipeline.transform(stream, TranscriptGen.roleDim(spark).toDF(),
+        TranscriptGen.toolDim(spark).toDF(), cfg),
+      "stream_route")
 
     routed.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = batch.persist()
-        try {
-          // idempotent: deterministic dir per (sink, batchId), overwrite
-          cached
-            .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-            .write.mode("overwrite")
-            .partitionBy(Route.SinkCol, "tool_invoked", "role")
-            .parquet(s"$outDir/routed/batch_id=$batchId")
-          Aggregate.sinkCounts(cached)
-            .withColumn("batch_id", lit(batchId))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(s"$outDir/sink_counts/batch_id=$batchId")
-          val sentRows = Obs.writeLineage(cached, batchId, "route", outDir)
-          obs.foreach(_.sent("route").add(sentRows))
-        } finally { cached.unpersist() }
-        ()
-      }
-      .start()
-  }
-
-  /** Config-driven streaming topology — the streaming twin of
-    * `Pipeline.runBatch(config=…)`: grok pattern, sampling, and sink
-    * predicates come from [[PipelineConfig]] JSON (the reference's
-    * YAML-driven service startup, SURVEY.md §3.1). All config-compiled
-    * stages are narrow/broadcast, so the streaming plan is identical in
-    * shape to the coded one.
-    */
-  def startWithConfig(spark: SparkSession, inputDir: String, outDir: String,
-                      checkpointDir: String, cfg: PipelineConfig,
-                      triggerMs: Long = 200L,
-                      maxFilesPerTrigger: Int = 8): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(Schemas.turn)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-      .withWatermark("ts", "10 minutes")
-    val routed = PipelineConfig.transform(spark, stream, cfg)
-    routed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-          .write.mode("overwrite")
-          .partitionBy(Route.SinkCol, "tool_invoked", "role")
-          .parquet(s"$outDir/routed/batch_id=$batchId")
-        ()
+        commitBatch(batch, outDir, batchId, obs)
       }
       .start()
   }
@@ -142,13 +124,11 @@ object StreamingPipeline {
                           outDir: String, checkpointDir: String,
                           watermark: String = "10 minutes",
                           windowLen: String = "1 hour",
-                          sinks: Seq[SinkSpec] = Route.defaultSinks): StreamingQuery = {
-    val roleDim = TranscriptGen.roleDim(spark).toDF()
-    val toolDim = TranscriptGen.toolDim(spark).toDF()
+                          cfg: PipelineConfig = PipelineConfig.default): StreamingQuery = {
     val routed = Pipeline.transform(
       spark.readStream.schema(Schemas.turn).parquet(inputDir)
         .withWatermark("ts", watermark),
-      roleDim, toolDim, sinks)
+      TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF(), cfg)
     routed
       .groupBy(window(col("ts"), windowLen), col(Route.SinkCol))
       .agg(count(lit(1)).as("n_turns"),

@@ -27,22 +27,14 @@ class ParseSpec extends SparkTestBase {
     assert(bad === 0)
   }
 
-  test("parse recovers generator ground truth (built-ins path)") {
+  test("parseGrok recovers generator ground truth") {
     val t = TranscriptGen.turns(spark, 300, seed = 42)
-    val parsed = Parse.parse(t)
+    val parsed = Parse.parseGrok(t)
     val bad = parsed.where(
       col("tool_invoked") =!= col("_truth.tool_invoked") ||
       col("status") =!= col("_truth.status") ||
       col("latency_ms") =!= col("_truth.latency_ms") ||
       !(col("err_code") <=> col("_truth.err_code"))).count()
     assert(bad === 0)
-  }
-
-  test("parseGrok ≡ parse (one-pass custom expression path)") {
-    val t = TranscriptGen.turns(spark, 300, seed = 42).drop("_truth")
-    val cols = Seq("conv_id", "turn_idx", "tool_invoked", "status", "err_code", "latency_ms")
-    val a = Parse.parse(t).select(cols.map(col): _*)
-    val b = Parse.parseGrok(t).select(cols.map(col): _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 }

@@ -80,7 +80,7 @@ class PlanSpec extends SparkTestBase {
 
   test("salted aggregation has map-side partial aggregation") {
     val turns = TranscriptGen.turns(spark, 100, seed = 42).drop("_truth")
-    val routed = Route.assign(Parse.parse(turns), Route.defaultSinks)
+    val routed = Route.assign(Parse.parseGrok(turns), Route.defaultSinks)
     val plan = planOf(Aggregate.partials(routed))
     // partial + final HashAggregate pair around one exchange, and no
     // ObjectHashAggregate (the bitmask keeps aggregation fixed-width)

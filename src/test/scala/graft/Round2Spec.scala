@@ -170,16 +170,27 @@ class Round2Spec extends SparkTestBase {
     val ckpt = tmpDir("cfg-stream-ckpt")
     val turns = TranscriptGen.turnsDs(spark, 100).toDF()
     turns.repartition(3).write.mode("append").parquet(inDir)
-    val cfg = PipelineConfig.fromJson(PipelineConfig.defaultJson)
-    val q = StreamingPipeline.startWithConfig(spark, inDir, outDir, ckpt, cfg)
+    val cfg = PipelineConfig.fromJson(configJson("pipeline.json"))
+    val q = StreamingPipeline.start(spark, inDir, outDir, ckpt, cfg,
+      maxFilesPerTrigger = 1)
     q.processAllAvailable()
     q.stop()
-    val streamed = spark.read.option("basePath", s"$outDir/routed")
-      .parquet(s"$outDir/routed/batch_id=*")
-      .groupBy("sink").count()
-    val batch = PipelineConfig.transform(spark, turns, cfg)
-      .groupBy("sink").count()
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+    def perSink(df: org.apache.spark.sql.DataFrame, n: String): Map[String, Long] =
+      df.groupBy("sink").agg(sum(n)).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val batch = perSink(Pipeline.transform(turns, TranscriptGen.roleDim(spark).toDF(),
+      TranscriptGen.toolDim(spark).toDF(), cfg).withColumn("n", lit(1L)), "n")
+    val streamed = perSink(StreamingPipeline.readRouted(spark, outDir)
+      .withColumn("n", lit(1L)), "n")
+    assert(streamed === batch)
+    // the config stream commits sink_counts and lineage like the default one:
+    // summed per-batch counts equal the batch counts
+    val counts = spark.read.option("basePath", s"$outDir/sink_counts")
+      .parquet(s"$outDir/sink_counts/batch_id=*")
+    assert(counts.select("batch_id").distinct().count() > 1)
+    assert(perSink(counts, "n_turns") === batch)
+    val lineage = spark.read.parquet(s"$outDir/_lineage/stage=route/batch_id=*")
+    assert(lineage.agg(sum("rows")).head().getLong(0) === turns.count())
   }
 
   test("streaming obs listener harvests per-batch observe metrics") {

@@ -18,6 +18,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Contents of an example config shipped in `configs/`. */
+  def configJson(name: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("configs", name)), "UTF-8")
+
   override def afterAll(): Unit = {
     // session is shared across suites; don't stop it here
     super.afterAll()
