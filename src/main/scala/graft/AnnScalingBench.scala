@@ -39,7 +39,8 @@ import org.apache.spark.sql.functions._
   * parallelism level (lo == hi single-level mode) is the honest protocol —
   * pair levels within one calm window, best-of-2 warm runs per level.
   */
-object AnnScalingBench {
+object AnnScalingBench
+    extends BenchHarness.Scaling("ann", "vecs", 1000000L) {
 
   private val Dim = 64
   private val K = 10
@@ -59,212 +60,148 @@ object AnnScalingBench {
     math.max(64, (nVecs / 200L).toInt)
 
   /** Shuffle partitions sized to DATA, identical at every level (see
-    * [[CurationScalingBench.partitionsFor]]); vector rows are ~4× smaller
+    * [[CurationScalingBench.partitions]]); vector rows are ~4× smaller
     * than document rows, so 4× the rows per task.
     */
-  private def partitionsFor(nVecs: Long, cores: Int): Int =
+  override def partitions(nVecs: Long, cores: Int): Int =
     math.max(cores, (nVecs / 125000L).toInt)
-
-  private def session(cores: Int, parts: Int): SparkSession = {
-    // SPARK_GRAFT_MASTER: the spark-submit local-cluster multi-executor
-    // protocol (see ScalingBench) — `cores` still sizes partitions
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"))
-      .appName(s"graft-ann-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local"))
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def time[A](f: => A): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   private def topkPairs(df: DataFrame): Set[(Long, Long)] =
     df.select(col("query_id").cast("long"), col("id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  def main(args: Array[String]): Unit = {
-    val nVecs = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val lo = args.lift(1).map(_.toInt).getOrElse(8)
-    val hi = args.lift(2).map(_.toInt).getOrElse(lo)
-    // optional 4th arg: comma-separated stage subset (default: all; the
-    // untimed recall passes only run on a full-stage run, since they read
-    // the ivf/pq artifacts those stages write)
-    val stageSet: Set[String] =
-      args.lift(3).map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
-    val corpusDir = sys.env.getOrElse("SPARK_GRAFT_VECS_DIR",
-      s"/dev/shm/graft-vecs-$nVecs")
-    val workDir = s"/dev/shm/graft-ann-$nVecs"
+  /** The vector corpus at one parallelism level, its durable ivf/pq
+    * artifacts under `workDir`, and every stage over them.
+    */
+  final class Vecs(spark: SparkSession, nVecs: Long, corpusDir: String) {
+    val workDir = s"$corpusDir-ann"
+    def corpus: DataFrame = spark.read.parquet(corpusDir)
+    def queries: DataFrame = corpus.where(col("vec_id") < NQ)
 
-    def run(cores: Int): (Map[String, (Double, (Long, Long, Long))],
-                          Map[String, Double]) = {
-      val spark = session(cores, partitionsFor(nVecs, cores))
-      try {
-        if (!new java.io.File(s"$corpusDir/_SUCCESS").exists())
-          VecGen.vecs(spark, nVecs, Dim, nClusters = clustersFor(nVecs))
-            .drop("cluster").repartition(128)
-            .write.mode("overwrite").parquet(corpusDir)
-        def corpus = spark.read.parquet(corpusDir)
-        def queries = corpus.where(col("vec_id") < NQ)
+    // codebooks: untimed, trained on a ~5% deterministic hash sample
+    // (lazy — a stage subset without pq stages never trains them)
+    lazy val cb = graft.ops.Pq.train(
+      corpus.where(pmod(xxhash64(col("vec_id"), lit(3L)), lit(20L)) === 0),
+      "vec_id", "embedding", M, Ksub, iters = 1)
 
-        // codebooks: untimed, trained on a ~5% deterministic hash sample
-        // (lazy — a stage subset without pq stages never trains them)
-        lazy val cb = graft.ops.Pq.train(
-          corpus.where(pmod(xxhash64(col("vec_id"), lit(3L)), lit(20L)) === 0),
-          "vec_id", "embedding", M, Ksub, iters = 1)
-
-        def bfRun(): Unit = {
-          val n = graft.ops.Similarity.bruteForceTopK(corpus, "vec_id",
-            "embedding", queries, "vec_id", "embedding", K).count()
-          require(n == NQ.toLong * K, s"bruteforce rows: $n")
-        }
-        def ivfBuildRun(): Unit =
-          graft.ops.Ivf.writeIndex(corpus, "vec_id", "embedding",
-            s"$workDir/ivf", nCells = NCells, kmeansIters = 1)
-        def ivfProbeRun(): Unit = {
-          val n = graft.ops.Ivf.probeIndex(spark, s"$workDir/ivf",
-            queries, "vec_id", "embedding", K, nProbe = NProbe).count()
-          require(n == NQ.toLong * K, s"ivf_probe rows: $n")
-        }
-        def pqEncodeRun(): Unit =
-          graft.ops.Pq.encode(corpus, "vec_id", "embedding", cb)
-            .write.mode("overwrite").parquet(s"$workDir/pq")
-        def pqAdcRun(): Unit = {
-          val n = graft.ops.Pq.pqTopKEncoded(
-            spark.read.parquet(s"$workDir/pq"),
-            queries, "vec_id", "embedding", cb, K).count()
-          require(n == NQ.toLong * K, s"pq_adc rows: $n")
-        }
-        def pqRerankRun(): Unit = {
-          val n = graft.ops.Pq.pqTopKReranked(
-            spark.read.parquet(s"$workDir/pq"), corpus, "vec_id",
-            "embedding", queries, "vec_id", "embedding", cb, K,
-            shortlist = Shortlist).count()
-          require(n == NQ.toLong * K, s"pq_rerank rows: $n")
-        }
-
-        def semDedupRun(): Unit = {
-          // SemDeDup over the clustered corpus: sampled quantizer
-          // (iters=0 — the Lloyd cost is ivf_build's row), capped in-cell
-          // cosine pairs, CC keep-set; the low-noise latent clusters make
-          // most cells near-cliques, so this measures the op at its
-          // densest realistic edge volume
-          val out = graft.ops.Dedup.semanticDedup(corpus, "vec_id",
-            "embedding", nCells = clustersFor(nVecs), threshold = 0.9,
-            kmeansIters = 0)
-          val (total, kept) = {
-            val r = out.agg(count(lit(1)), count_if(col("keep"))).head()
-            (r.getLong(0), r.getLong(1))
-          }
-          require(total == nVecs, s"semdedup rows: $total != $nVecs")
-          require(kept > 0 && kept < nVecs, s"semdedup kept $kept of $nVecs")
-        }
-
-        def knnGraphRun(): Unit = {
-          // approximate KNN GRAPH: every corpus row is its own query — the
-          // heaviest self-join shape in the family (≈ rows × (planes+1)
-          // probes × avg-bucket candidates); cap + salt bound hot buckets.
-          // planes sized so avg bucket ≈ corpus/2^planes stays ~60 rows.
-          val n = graft.ops.Similarity.knnGraphLsh(corpus, "vec_id",
-            "embedding", k = K, planes = 12, bucketCap = 2048, salt = 4)
-            .count()
-          require(n > 0, s"knn_graph rows: $n")
-        }
-
-        val io = new IoListener
-        spark.sparkContext.addSparkListener(io)
-        // build stages run (warm + timed) before their probe stages read
-        val optIn = Set("semdedup", "knn_graph")
-        val stages = Seq(
-          "bruteforce" -> (() => bfRun()),
-          "ivf_build" -> (() => ivfBuildRun()),
-          "ivf_probe" -> (() => ivfProbeRun()),
-          "pq_encode" -> (() => pqEncodeRun()),
-          "pq_adc" -> (() => pqAdcRun()),
-          "pq_rerank" -> (() => pqRerankRun()),
-          "semdedup" -> (() => semDedupRun()),
-          "knn_graph" -> (() => knnGraphRun()))
-          .filter { case (name, _) =>
-            // semdedup/knn_graph are opt-in: the historical 6-stage full
-            // run (the published ANN table) stays reproducible as-is
-            if (stageSet.isEmpty) !optIn(name) else stageSet(name) }
-        require(stages.nonEmpty, s"no stage matches $stageSet")
-        // a probe-only subset would silently time probes against whatever
-        // STALE artifact a previous run left in the persistent workDir —
-        // make the dependency explicit
-        if (stageSet.nonEmpty) {
-          def needs(probe: String, build: String, artifact: String): Unit =
-            if (stageSet(probe) && !stageSet(build))
-              require(new java.io.File(artifact).exists(),
-                s"stage $probe without $build in the subset needs a prior " +
-                  s"$artifact (and it may be stale — prefer including $build)")
-          needs("ivf_probe", "ivf_build", s"$workDir/ivf")
-          needs("pq_adc", "pq_encode", s"$workDir/pq")
-          needs("pq_rerank", "pq_encode", s"$workDir/pq")
-        }
-        val timed = stages.map { case (name, f) =>
-          val w = time(f()) // full-size warm: codegen + classloading outside the timing
-          io.reset()
-          val s1 = time(f())
-          org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark.sparkContext)
-          val bytes = (io.input.get, io.shufWrite.get, io.shufRead.get)
-          val s2 = time(f())
-          System.err.println(f"[ann-bench $cores%dc] $name%s warm=$w%.1f t1=$s1%.1f t2=$s2%.1f")
-          name -> (math.min(s1, s2), bytes)
-        }.toMap
-
-        // recall@k vs brute force (untimed; nQ × k rows per side) — full
-        // runs only: stage subsets may not have written the artifacts
-        val recall = if (stageSet.nonEmpty) Map.empty[String, Double] else {
-          val bf = topkPairs(graft.ops.Similarity.bruteForceTopK(corpus,
-            "vec_id", "embedding", queries, "vec_id", "embedding", K))
-          val ivf = topkPairs(graft.ops.Ivf.probeIndex(spark, s"$workDir/ivf",
-            queries, "vec_id", "embedding", K, nProbe = NProbe))
-          val pq = topkPairs(graft.ops.Pq.pqTopKEncoded(
-            spark.read.parquet(s"$workDir/pq"),
-            queries, "vec_id", "embedding", cb, K))
-          val rr = topkPairs(graft.ops.Pq.pqTopKReranked(
-            spark.read.parquet(s"$workDir/pq"), corpus, "vec_id",
-            "embedding", queries, "vec_id", "embedding", cb, K,
-            shortlist = Shortlist))
-          Map(
-            "ivf_probe" -> (ivf & bf).size.toDouble / bf.size,
-            "pq_adc" -> (pq & bf).size.toDouble / bf.size,
-            "pq_rerank" -> (rr & bf).size.toDouble / bf.size)
-        }
-        (timed, recall)
-      } finally spark.stop()
+    def bfRun(): Unit = {
+      val n = graft.ops.Similarity.bruteForceTopK(corpus, "vec_id",
+        "embedding", queries, "vec_id", "embedding", K).count()
+      require(n == NQ.toLong * K, s"bruteforce rows: $n")
+    }
+    def ivfBuildRun(): Unit =
+      graft.ops.Ivf.writeIndex(corpus, "vec_id", "embedding",
+        s"$workDir/ivf", nCells = NCells, kmeansIters = 1)
+    private def ivfProbe = graft.ops.Ivf.probeIndex(spark, s"$workDir/ivf",
+      queries, "vec_id", "embedding", K, nProbe = NProbe)
+    def ivfProbeRun(): Unit = {
+      val n = ivfProbe.count()
+      require(n == NQ.toLong * K, s"ivf_probe rows: $n")
+    }
+    def pqEncodeRun(): Unit =
+      graft.ops.Pq.encode(corpus, "vec_id", "embedding", cb)
+        .write.mode("overwrite").parquet(s"$workDir/pq")
+    private def pqAdc = graft.ops.Pq.pqTopKEncoded(
+      spark.read.parquet(s"$workDir/pq"),
+      queries, "vec_id", "embedding", cb, K)
+    def pqAdcRun(): Unit = {
+      val n = pqAdc.count()
+      require(n == NQ.toLong * K, s"pq_adc rows: $n")
+    }
+    private def pqRerank = graft.ops.Pq.pqTopKReranked(
+      spark.read.parquet(s"$workDir/pq"), corpus, "vec_id",
+      "embedding", queries, "vec_id", "embedding", cb, K,
+      shortlist = Shortlist)
+    def pqRerankRun(): Unit = {
+      val n = pqRerank.count()
+      require(n == NQ.toLong * K, s"pq_rerank rows: $n")
     }
 
-    def fmt(cores: Int, r: Map[String, (Double, (Long, Long, Long))],
-            rec: Map[String, Double]): String = {
-      val rows = r.toSeq.sortBy(_._1).map { case (name, (sec, (in, sw, sr))) =>
-        val recPart = rec.get(name).map(v => f""","recall_at_$K":$v%.3f""").getOrElse("")
-        f""""$name":{"sec":$sec%.2f,"vecs_per_sec":${nVecs / sec}%.0f$recPart,"input_bytes":$in,"shuffle_write_bytes":$sw,"shuffle_read_bytes":$sr}"""
-      }.mkString(",")
-      s"""{"cores":$cores,$rows}"""
+    def semDedupRun(): Unit = {
+      // SemDeDup over the clustered corpus: sampled quantizer
+      // (iters=0 — the Lloyd cost is ivf_build's row), capped in-cell
+      // cosine pairs, CC keep-set; the low-noise latent clusters make
+      // most cells near-cliques, so this measures the op at its
+      // densest realistic edge volume
+      val out = graft.ops.Dedup.semanticDedup(corpus, "vec_id",
+        "embedding", nCells = clustersFor(nVecs), threshold = 0.9,
+        kmeansIters = 0)
+      val (total, kept) = {
+        val r = out.agg(count(lit(1)), count_if(col("keep"))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      require(total == nVecs, s"semdedup rows: $total != $nVecs")
+      require(kept > 0 && kept < nVecs, s"semdedup kept $kept of $nVecs")
     }
 
-    if (lo == hi) {
-      val (r, rec) = run(lo)
-      println(s"""{"metric":"ann_throughput","vecs":$nVecs,"dim":$Dim,"level":${fmt(lo, r, rec)}}""")
-    } else {
-      val (rLo, recLo) = run(lo)
-      val (rHi, recHi) = run(hi)
-      val effs = rLo.keys.map { k =>
-        val e = (rLo(k)._1 / rHi(k)._1) / (hi.toDouble / lo)
-        f""""$k":$e%.3f"""
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"ann_scaling","vecs":$nVecs,"dim":$Dim,"eff":$effs,"lo":${fmt(lo, rLo, recLo)},"hi":${fmt(hi, rHi, recHi)}}""")
+    def knnGraphRun(): Unit = {
+      // approximate KNN GRAPH: every corpus row is its own query — the
+      // heaviest self-join shape in the family (≈ rows × (planes+1)
+      // probes × avg-bucket candidates); cap + salt bound hot buckets.
+      // planes sized so avg bucket ≈ corpus/2^planes stays ~60 rows.
+      val n = graft.ops.Similarity.knnGraphLsh(corpus, "vec_id",
+        "embedding", k = K, planes = 12, bucketCap = 2048, salt = 4)
+        .count()
+      require(n > 0, s"knn_graph rows: $n")
+    }
+
+    /** recall@k vs brute force (untimed; nQ × k rows per side) of each
+      * probe stage that ran — its artifact was built or checked this run.
+      */
+    def recall(ran: Seq[String]): Map[String, String] = {
+      val probes = Map("ivf_probe" -> (() => ivfProbe),
+        "pq_adc" -> (() => pqAdc), "pq_rerank" -> (() => pqRerank))
+        .filter { case (s, _) => ran.contains(s) }
+      if (probes.isEmpty) Map.empty else {
+        val bf = topkPairs(graft.ops.Similarity.bruteForceTopK(corpus,
+          "vec_id", "embedding", queries, "vec_id", "embedding", K))
+        probes.map { case (s, probe) =>
+          val r = (topkPairs(probe()) & bf).size.toDouble / bf.size
+          s -> f""""recall_at_$K":$r%.3f"""
+        }
+      }
     }
   }
+
+  type Corpus = Vecs
+  // build stages run (warm + timed) before their probe stages read
+  val stages: Seq[(String, Vecs => Unit)] = Seq(
+    "bruteforce" -> (_.bfRun()),
+    "ivf_build" -> (_.ivfBuildRun()),
+    "ivf_probe" -> (_.ivfProbeRun()),
+    "pq_encode" -> (_.pqEncodeRun()),
+    "pq_adc" -> (_.pqAdcRun()),
+    "pq_rerank" -> (_.pqRerankRun()),
+    "semdedup" -> (_.semDedupRun()),
+    "knn_graph" -> (_.knnGraphRun()))
+  // semdedup/knn_graph are opt-in: the historical 6-stage full run (the
+  // published ANN table) stays reproducible as-is
+  val defaults: Seq[String] = stages.map(_._1)
+    .filterNot(Set("semdedup", "knn_graph"))
+  override def header: Seq[(String, String)] = Seq("dim" -> Dim.toString)
+
+  def open(spark: SparkSession, a: BenchHarness.Args): Vecs = {
+    val dir = sys.env.getOrElse("SPARK_GRAFT_VECS_DIR",
+      s"/dev/shm/graft-vecs-${a.n}")
+    BenchHarness.writeOnce(dir)(
+      VecGen.vecs(spark, a.n, Dim, nClusters = clustersFor(a.n))
+        .drop("cluster").repartition(128)
+        .write.mode("overwrite").parquet(dir))
+    val v = new Vecs(spark, a.n, dir)
+    // a probe without its build would silently time probes against
+    // whatever STALE artifact a previous run left in the persistent
+    // workDir — make the dependency explicit
+    def needs(probe: String, build: String, artifact: String): Unit =
+      if (a.stages.contains(probe) && !a.stages.contains(build))
+        require(new java.io.File(s"${v.workDir}/$artifact").exists(),
+          s"stage $probe without $build in the subset needs a prior " +
+            s"${v.workDir}/$artifact (and it may be stale — prefer including $build)")
+    needs("ivf_probe", "ivf_build", "ivf")
+    needs("pq_adc", "pq_encode", "pq")
+    needs("pq_rerank", "pq_encode", "pq")
+    v
+  }
+
+  override def extras(v: Vecs, a: BenchHarness.Args): Map[String, String] =
+    v.recall(a.stages)
 }

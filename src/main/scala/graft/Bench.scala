@@ -39,37 +39,13 @@ object Bench {
     // the cost center) and PSL registrable-domain resolution
     "q_dup_span_removal", "q_url_domain_psl")
 
-  def time[A](f: => A): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Full-materialization action over EVERY output column — the shared
-    * forcing idiom of the bench mains (count() would let Catalyst prune
-    * computed columns that don't change the row count, the documented
-    * bench trap). [[sftRunFrom]] inlines a fused variant because it also
-    * needs the turn count from the same single action.
-    */
-  private[graft] def forceAll(df: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
-    df.select(xxhash64(df.columns.map(col): _*).as("h"))
-      .agg(bit_xor(col("h"))).head()
-    ()
-  }
-
-  /** Transcript pipeline throughput: nConvs conversations (~3.45 turns/conv
-    * at the Zipf default) through parse→enrich→route→aggregate, both
-    * aggregates materialized. One full-data pass: the salted partial
-    * aggregation is the only shuffle; per-sink counts, per-conversation
-    * rollups, and the turn count all derive from the (small) partials frame
-    * — no full-size persist (which would bottleneck on cache write, not
-    * pipeline compute). Returns (seconds, turns).
-    */
-  def pipelineRun(spark: SparkSession, nConvs: Long): (Double, Long) =
-    pipelineRunFrom(spark, TranscriptGen.turnsDs(spark, nConvs).toDF())
-
-  /** Same pipeline over a caller-supplied turns frame (e.g. a parquet
-    * scan — the production shape; the vectorized reader feeds codegen
-    * directly, unlike the allocation-heavy in-memory generator).
+  /** Transcript pipeline throughput over a turns frame (a parquet scan is
+    * the production shape; the vectorized reader feeds codegen directly,
+    * unlike the allocation-heavy in-memory generator):
+    * parse→enrich→route→aggregate, both aggregates materialized. One
+    * full-data pass: the salted partial aggregation is the only shuffle;
+    * per-sink counts, per-conversation rollups and the turn count all
+    * derive from the (small) partials frame. Returns (seconds, turns).
     *
     * `salt`: pass 1 for conv-clustered (bucketed) input — the aggregation
     * is then shuffle-free, so there is no shuffle skew for the salt to
@@ -82,67 +58,12 @@ object Bench {
       TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
     val partials = Aggregate.partials(routed, salt = salt).persist()
     var n = 0L
-    val sec = time {
+    val sec = BenchHarness.time {
       n = Aggregate.sinkCountsFromPartials(partials)
         .collect().map(_.getLong(1)).sum
       Aggregate.convRollupFromPartials(partials).count()
     }
     partials.unpersist(blocking = true)
-    (sec, n)
-  }
-
-  /** SFT render job for the scaling bench: [[graft.ops.SftPrep.chatTemplate]]
-    * over the corpus with EVERY output column (the rendered string and the
-    * span array included) forced through the all-columns hash — count()
-    * would let Catalyst prune the render itself, the documented bench
-    * trap. Returns (seconds, turns rendered). On the conv-bucketed layout
-    * the conversation groupBy is exchange-free (the bucketing satisfies
-    * the aggregation's distribution), so the stage measures pure
-    * scan+render compute scaling; on the scattered layout the ENTIRE
-    * corpus shuffles on conv_id — the same bucketed-vs-scattered contrast
-    * the routing rows quantify.
-    */
-  def sftRunFrom(spark: SparkSession,
-                 turns: org.apache.spark.sql.DataFrame): (Double, Long) = {
-    import org.apache.spark.sql.functions._
-    val r = graft.ops.SftPrep.chatTemplate(turns)
-    var n = 0L
-    val sec = time {
-      n = r.select(xxhash64(r.columns.map(col): _*).as("h"),
-          col("n_turns").cast("long").as("nt"))
-        .agg(bit_xor(col("h")).as("x"), sum(col("nt")).as("n"))
-        .head().getLong(1)
-    }
-    (sec, n)
-  }
-
-  /** The REST of the SFT family for the scaling bench — token-span
-    * alignment, whole-turn truncation, preference pairs, and structural
-    * validation, each forced through the all-columns hash. All four are
-    * one window/aggregation on the conversation key (zero exchange on
-    * the bucketed layout), so together with [[sftRunFrom]] this times
-    * the complete turns→trainer-input pass. Returns (seconds, turns
-    * validated).
-    */
-  def sftPrepRunFrom(spark: SparkSession,
-                     turns: org.apache.spark.sql.DataFrame): (Double, Long) = {
-    import org.apache.spark.sql.functions._
-    var n = 0L
-    val sec = time {
-      forceAll(graft.ops.SftPrep.tokenSpans(turns))
-      forceAll(graft.ops.SftPrep.truncateToBudget(turns, budget = 64))
-      val cands = turns.where(col("role") === "assistant")
-        .select(col("conv_id"), col("turn_idx"), col("text"),
-          (lit(0L) - coalesce(Parse.latencyMs(col("text")), lit(0L)))
-            .as("score"))
-      forceAll(graft.ops.SftPrep.preferencePairs(cands, "conv_id",
-        "turn_idx", "score", "text"))
-      val v = graft.ops.SftPrep.validateTranscripts(turns)
-      n = v.select(xxhash64(v.columns.map(col): _*).as("h"),
-          col("n_turns"))
-        .agg(bit_xor(col("h")).as("x"), sum(col("n_turns")).as("n"))
-        .head().getLong(1)
-    }
     (sec, n)
   }
 
@@ -164,6 +85,7 @@ object Bench {
   }
 
   private def run(spark: SparkSession, sfDir: String): Unit = {
+    import BenchHarness.{forceAll, time}
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup outside the timed region: run every headline
@@ -171,103 +93,71 @@ object Bench {
     // classloading don't bill the first timed call — the bench measures
     // steady-state throughput (the 100 TB regime), not JIT startup.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    headline.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-    }
-    headlineForced.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try forceAll(fn(spark, warmDir)) catch { case _: Throwable => () }
-      }
-    }
+    headline.foreach(name => SparkEntry.queries(name)(spark, warmDir).count())
+    headlineForced.foreach(name =>
+      forceAll(SparkEntry.queries(name)(spark, warmDir)))
 
     // best-of-2 per query: the sandbox VM has multi-minute hypervisor-steal
     // windows that inflate single runs up to 4×
-    val results = headline.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        name -> math.min(time(fn(spark, sfDir).count()),
-                         time(fn(spark, sfDir).count()))
-      }
-    } ++ headlineForced.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        name -> math.min(time(forceAll(fn(spark, sfDir))),
-                         time(forceAll(fn(spark, sfDir))))
-      }
+    val results = headline.map { name =>
+      val fn = SparkEntry.queries(name)
+      name -> math.min(time(fn(spark, sfDir).count()),
+                       time(fn(spark, sfDir).count()))
+    } ++ headlineForced.map { name =>
+      val fn = SparkEntry.queries(name)
+      name -> math.min(time(forceAll(fn(spark, sfDir))),
+                       time(forceAll(fn(spark, sfDir))))
     }
 
-    // IoListener: every pipeline row carries its measured input/shuffle
-    // bytes, so a timing anomaly (hypervisor steal inflated the round-2
-    // pipeline_bucketed row 20×) is distinguishable from a plan
-    // regression — the bytes don't lie even when the clock does.
-    val io = new IoListener
-    spark.sparkContext.addSparkListener(io)
-    def measured(run: => (Double, Long)): (Double, Long, (Long, Long, Long)) = {
-      io.reset()
-      val (s1, n) = run
-      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark.sparkContext)
-      val bytes = (io.input.get, io.shufWrite.get, io.shufRead.get)
-      // best-of-3: single-shot timings are steal-exposed (observed 7×
-      // swings between back-to-back bench invocations on this VM), and
-      // these two rows are the headline artifact
-      val (s2, _) = run
-      val (s3, _) = run
-      (math.min(s1, math.min(s2, s3)), n, bytes)
+    // the two pipeline rows: best-of-3 after a full-size warm run
+    // (single-shot timings are steal-exposed — observed 7× swings between
+    // back-to-back invocations), each with the task bytes of its first
+    // timed run, so a timing anomaly (steal inflated the round-2
+    // pipeline_bucketed row 20×) is told apart from a plan regression
+    val gen = TranscriptGen.turnsDs(spark, 145000L).toDF() // ~600k turns
+    var pipeTurns = 0L
+    val pipe = BenchHarness.measure(spark, 3) { () =>
+      pipeTurns = pipelineRunFrom(spark, gen)._2
     }
-
-    // pipeline throughput at bench scale (~600k turns); warm codegen first
-    pipelineRun(spark, 2000L)
-    val (pipeSec, pipeTurns, pipeIo) = measured(pipelineRun(spark, 145000L))
-    val turnsPerSec = pipeTurns / pipeSec
+    val turnsPerSec = pipeTurns / pipe.sec
 
     // production shape: same pipeline over a conv-bucketed table scan
     // (zero data shuffle — the 100 TB layout; corpus written once,
     // untimed). A failure here (e.g. no /dev/shm) fails the bench.
-    val (bktSec, bktIo) = {
-      val bktDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_BKT_DIR",
-        "/dev/shm/graft-bench-bkt")
-      if (!new java.io.File(s"$bktDir/_SUCCESS").exists())
-        BucketedCorpus.write(TranscriptGen.turnsDs(spark, 145000L).toDF(),
-          bktDir, "graft_bench_corpus", buckets = 32)
-      def bkt = BucketedCorpus.open(spark, bktDir, "graft_bench_corpus", 32)
-      val bktSalt = Aggregate.saltFor(bucketed = true)
-      pipelineRunFrom(spark, bkt, bktSalt) // warm
-      val (s, _, b) = measured(pipelineRunFrom(spark, bkt, bktSalt))
-      (s, b)
+    val bktDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_BKT_DIR",
+      "/dev/shm/graft-bench-bkt")
+    BenchHarness.writeOnce(bktDir)(
+      BucketedCorpus.write(gen, bktDir, "graft_bench_corpus", buckets = 32))
+    val bktTurns = BucketedCorpus.open(spark, bktDir, "graft_bench_corpus", 32)
+    val bkt = BenchHarness.measure(spark, 3) { () =>
+      pipelineRunFrom(spark, bktTurns, Aggregate.saltFor(bucketed = true))
     }
 
     // corpus-curation end-to-end: dedup → clusters → decontamination →
     // quality → mixture → redaction → shard/split, one survivor filter
     // pass + one attrition aggregation (CurationPipeline's design claim,
-    // timed here as a whole)
+    // timed here as a whole). All columns are forced: count() would let
+    // Catalyst prune the PII redaction and shard/split projections.
     def curationRun(): Double = {
-      import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       time {
         val (curated, _) = graft.ops.CurationPipeline.curate(
-          docs, "doc_id", "text", "lang",
-          evalSet = Some(docs.where(col("doc_id") % 7 === 0)))
-        // hash EVERY output column, not count(): count() lets Catalyst
-        // prune every computed column that doesn't feed the survivor
-        // filter (the PII redaction projection, shard/split assignment) —
-        // the known count()-pruning bench trap. The xxhash64-over-all-
-        // columns aggregate forces full materialization of the frame the
-        // row claims to time.
-        curated.select(xxhash64(curated.columns.map(col): _*).as("h"))
-          .agg(bit_xor(col("h"))).head()
+          docs, "doc_id", "text", "lang", evalSet = Some(docs.where(
+            org.apache.spark.sql.functions.col("doc_id") % 7 === 0)))
+        forceAll(curated)
       }
     }
     curationRun() // warm
     val curSec = math.min(curationRun(), curationRun())
 
     val all = results :+ ("curation_e2e" -> curSec) :+
-      ("pipeline_e2e" -> pipeSec) :+
-      ("pipeline_bucketed" -> bktSec)
+      ("pipeline_e2e" -> pipe.sec) :+
+      ("pipeline_bucketed" -> bkt.sec)
     val qs = all.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     val total = all.map(_._2).sum
-    def ioJson(b: (Long, Long, Long)): String =
-      s"""{"input_bytes":${b._1},"shuffle_write_bytes":${b._2},"shuffle_read_bytes":${b._3}}"""
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","pipeline_turns":$pipeTurns,"pipeline_turns_per_sec":$turnsPerSec%.0f,"io":{"pipeline_e2e":${ioJson(pipeIo)},"pipeline_bucketed":${ioJson(bktIo)}}}""")
+    def ioJson(m: BenchHarness.Measured): String =
+      s"""{"input_bytes":${m.inputBytes},"shuffle_write_bytes":${m.shuffleWriteBytes},"shuffle_read_bytes":${m.shuffleReadBytes}}"""
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","pipeline_turns":$pipeTurns,"pipeline_turns_per_sec":$turnsPerSec%.0f,"io":{"pipeline_e2e":${ioJson(pipe)},"pipeline_bucketed":${ioJson(bkt)}}}""")
   }
 }

@@ -165,13 +165,14 @@ object Dedup {
   /** Candidate pairs via banded LSH over minhash signatures.
     * Output: (id_a, id_b, jaccard_est) with id_a < id_b, distinct.
     *
-    * Cache lifecycle: the signature frame is `localCheckpoint(eager)`ed —
-    * computed once, read by both self-join sides, and its blocks are
-    * released by the ContextCleaner when the result frame is dropped
-    * (plain `persist` would pin blocks in the CacheManager until an
-    * explicit unpersist, leaking across calls in a long-lived session).
-    * At real scale the signature frame is the durable index artifact —
-    * write it to a table and reuse it across dedup runs.
+    * Cache lifecycle: [[minhashCandidatesFromSig]] `localCheckpoint(eager)`s
+    * the signature frame — computed once (one Spark job), read by the band
+    * explode and both estimate joins, and its blocks are released by the
+    * ContextCleaner when the result frame is dropped (plain `persist` would
+    * pin blocks in the CacheManager until an explicit unpersist, leaking
+    * across calls in a long-lived session). At real scale the signature
+    * frame is the durable index artifact — write it to a table and reuse
+    * it across dedup runs.
     */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, bands: Int = 16,
@@ -180,8 +181,7 @@ object Dedup {
                         obsTag: Option[String] = None): DataFrame =
     minhashCandidatesFromSig(
       df.select(col(idCol).as("id"),
-          minhashSignature(wordShingles(col(textCol), shingleK), numHashes).as("sig"))
-        .localCheckpoint(true),
+        minhashSignature(wordShingles(col(textCol), shingleK), numHashes).as("sig")),
       numHashes, bands, bucketCap, obsTag)
 
   /** LSH band array of a minhash signature column:

@@ -136,4 +136,29 @@ class MinHashSpec extends SparkTestBase {
       .head().getInt(0)
     assert(uneven === 1)
   }
+
+  test("minhashCandidates materializes its signature frame with one job") {
+    // one eager localCheckpoint of the (id, sig) frame — a second
+    // checkpoint of the same rows would recompute nothing new but still
+    // cost a full pass over the signatures
+    import spark.implicits._
+    val docs = (0 until 200).map(i =>
+        (i.toLong, s"shared opening words for every doc then ${i % 13} and $i"))
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val cands = Dedup.minhashCandidates(docs, "doc_id", "text")
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(sc)
+      assert(jobs.get === 1)
+      assert(cands.columns.toSeq === Seq("id_a", "id_b", "jaccard_est"))
+    } finally sc.removeSparkListener(listener)
+  }
 }
